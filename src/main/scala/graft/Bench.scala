@@ -1,5 +1,10 @@
 package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Driver-run benchmark: one JSON line with per-query wall times.
   *
@@ -135,45 +140,160 @@ object Bench {
     "l28_pretrain_neardup", // the pipeline with the component-collapse stage
     "m6_scd2_history")      // SCD2 keep-every-version window
 
+  /** Entry point. No argument = the timing mode (its stdout contract:
+    * an attempts line, then one metric line). Two diagnosis modes share
+    * its session and row selection:
+    *
+    *   - `profile`: every selected row run 3 times under a per-job
+    *     listener (see [[profile]]);
+    *   - `plans <dir>`: each selected row's formatted explain written to
+    *     `<dir>/<row>.txt` (see [[plans]]).
+    *
+    * Every mode runs the library's own [[Engine.session]], so what is
+    * timed, profiled and explained is the configuration `Verify` checks.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE scale big shuffles UP, not just coalesce down — at 10⁵+
-      // vectors the ANN candidate shuffles carry 10⁸ rows (see Engine)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // fixture tables are single parquet files; without this a scan is
-      // ONE task and a broadcast-join pipeline runs on one core of 32
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      // keep typed-Aggregator top-k hash-based (see Engine.session)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // point-probe pushdown (l42/l55/l57/l59): the exact-IN form needs
-      // the threshold above DedupIndex.InKeyCap or Spark degrades the
-      // pushed IN to one [min,max] range (see Engine.session)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "600")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the persisted-tier SQL surface (graft_dedup_bands etc.) — l66
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val qs = SparkEntry.benchQueries
-    // SPARK_GRAFT_ONLY=q1,q2 narrows the run for local iteration; the
-    // driver leaves it unset and gets the full headline set. Unknown or
-    // empty names fail LOUDLY — a typo that silently benched nothing
-    // would print total=0 and read as a perfect run
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- headline.toSet
-      require(names.nonEmpty && unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in Bench.headline: ${unknown.mkString(", ")}")
+    val spark = Engine.session(s"local[$cpus]", "graft-bench", Some(cpus.toInt))
+    val names = only(headline, "Bench.headline")
+    val ok = args.toSeq match {
+      case Seq() => timing(spark, sfDir, names)
+      case Seq("profile") => profile(spark, sfDir, names); true
+      case Seq("plans", dir) => plans(spark, sfDir, names, dir)
+      case _ =>
+        System.err.println("usage: graft.Bench [profile | plans <dir>]")
+        false
     }
+    spark.stop()
+    if (!ok) sys.exit(1)
+  }
+
+  /** The rows of `universe` named by SPARK_GRAFT_ONLY=q1,q2 (all of them
+    * when it is unset) — local iteration narrows a run with it; an
+    * official run leaves it unset. Unknown or empty names fail LOUDLY: a typo
+    * that silently selected nothing would bench total=0 and read as a
+    * perfect run. */
+  def only(universe: Seq[String], what: String): Seq[String] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case None => universe
+      case Some(v) =>
+        val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = names -- universe
+        require(names.nonEmpty && unknown.isEmpty,
+          s"SPARK_GRAFT_ONLY names not in $what: ${unknown.mkString(", ")}")
+        universe.filter(names)
+    }
+
+  /** `Bench profile`: runs each row 3 times with a listener that logs
+    * every Spark job's wall time, stage/task counts and shuffle bytes —
+    * the measure-first view for rows whose cost hides in eager prefixes
+    * (index builds, checkpoints, driver loops) where a plan shows
+    * nothing. Gaps between jobs are DRIVER time (planning, collects,
+    * single-threaded loops), printed explicitly because at local scale
+    * they are routinely the real cost. A completed stage is charged to
+    * the first job whose start event listed its id; the rep header
+    * counts any stage no job listed. */
+  private def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    case class Job(id: Int, start: Long, stages: Int, desc: String, var end: Long = 0L,
+                   var tasks: Int = 0, var shufRead: Long = 0L, var shufWrite: Long = 0L)
+    // listener-bus thread writes, main thread reads: all under this lock
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, Job]
+    val stageJob = scala.collection.mutable.HashMap.empty[Int, Job]
+    var unattributed = 0
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        val j = Job(e.jobId, e.time, e.stageIds.size, desc)
+        jobs(e.jobId) = j
+        e.stageIds.foreach(stageJob.getOrElseUpdate(_, j))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
+        jobs.get(e.jobId).foreach(_.end = e.time)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
+        val si = e.stageInfo
+        stageJob.get(si.stageId) match {
+          case Some(j) =>
+            j.tasks += si.numTasks
+            j.shufRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
+            j.shufWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
+          case None => unattributed += 1
+        }
+      }
+    })
+    val qs = SparkEntry.benchQueries
+    for (name <- names; rep <- 1 to 3) {
+      jobs.synchronized { jobs.clear(); stageJob.clear(); unattributed = 0 }
+      val t0 = System.nanoTime()
+      qs(name)(spark, sfDir).count()
+      val dt = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(200) // let listener events drain
+      jobs.synchronized {
+        println(f"== $name rep $rep: $dt%.3f s, ${jobs.size} jobs, $unattributed unattributed stages")
+        var prevEnd = 0L
+        jobs.values.foreach { j =>
+          val gap = if (prevEnd > 0) j.start - prevEnd else 0L
+          prevEnd = j.end
+          println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.2f s gapBefore=${gap / 1e3}%6.2f s " +
+            f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+            f"shufR=${j.shufRead / 1048576.0}%8.2f MB shufW=${j.shufWrite / 1048576.0}%8.2f MB  ${j.desc.take(80)}")
+        }
+      }
+    }
+  }
+
+  /** `Bench plans <dir>`: writes `.explain("formatted")` of each row to
+    * `<dir>/<row>.txt` — the artifact plan-shape claims (Exchange
+    * counts, join strategies, PushedFilters) are checked against.
+    * Building a row's DataFrame executes its eager prefix (index
+    * builds, checkpoints) exactly as the timing mode does, so the plan
+    * is the timed read path, not a cold stub. A row whose explain
+    * throws is reported, its file removed, and the rest still written;
+    * returns false if any row failed. */
+  private def plans(spark: SparkSession, sfDir: String, names: Seq[String], dir: String): Boolean = {
+    val qs = SparkEntry.benchQueries
+    val out = Files.createDirectories(Paths.get(dir))
+    val failed = names.filterNot { name =>
+      val file = out.resolve(s"$name.txt")
+      Files.deleteIfExists(file)
+      System.err.println(s"[bench:plans] $name")
+      try {
+        Files.writeString(file,
+          qs(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
+        true
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench:plans] FAILED $name — ${e.getClass.getSimpleName}: ${e.getMessage}")
+          false
+      }
+    }
+    failed.isEmpty
+  }
+
+  /** (busy, steal, iowait) jiffies from the aggregate /proc/stat row.
+    * Steal is the direct hypervisor-contention signal on a shared
+    * host: this box's history shows a 20% steal ratio in bursts, and
+    * a burst lands inside whatever tasks are running — the one
+    * contamination mode the load average cannot see (a stolen vCPU
+    * is still "busy"). ScaleBench brackets its reps with the same read. */
+  private[graft] def cpuStat(): (Long, Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try {
+        val cols = src.getLines()
+          .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1).map(_.toLong)
+        // user nice system idle iowait irq softirq steal
+        (cols.take(3).sum + cols.drop(5).take(2).sum,
+          if (cols.length > 7) cols(7) else 0L,
+          if (cols.length > 4) cols(4) else 0L)
+      } finally src.close()
+    } catch { case _: Throwable => (0L, 0L, 0L) }
+
+  /** The timing mode: returns false if any row failed. */
+  private def timing(spark: SparkSession, sfDir: String, selected: Seq[String]): Boolean = {
+    val qs = SparkEntry.benchQueries
     // A failing query must be VISIBLE in the artifact: the former shape
     // swallowed exceptions and recorded the (tiny) time-to-failure, so a
     // broken query made the bench look FASTER — the one direction an
@@ -231,25 +351,6 @@ object Bench {
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-    /** (busyJiffies, stealJiffies) from the aggregate /proc/stat row.
-      * Steal is the direct hypervisor-contention signal on a shared
-      * host: this box's history shows a 20% steal ratio in bursts, and
-      * a burst lands inside whatever tasks are running — the one
-      * contamination mode the load average cannot see (a stolen vCPU
-      * is still "busy"). */
-    def cpuStat(): (Long, Long, Long) =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val cols = src.getLines()
-            .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1).map(_.toLong)
-          // user nice system idle iowait irq softirq steal
-          (cols.take(3).sum + cols.drop(5).take(2).sum,
-            if (cols.length > 7) cols(7) else 0L,
-            if (cols.length > 4) cols(4) else 0L)
-        } finally src.close()
-      } catch { case _: Throwable => (0L, 0L, 0L) }
-
     /** This JVM's own consumed CPU in jiffies (utime+stime+reaped
       * children) from /proc/self/stat — the same USER_HZ clock as the
       * aggregate /proc/stat row, so machineBusyΔ − selfΔ is directly
@@ -268,7 +369,6 @@ object Bench {
       } catch { case _: Throwable => 0L }
 
     val gaugeQ = "d1_q1_pricing"
-    val selected = headline.filter(qs.contains).filter(n => only.forall(_.contains(n)))
 
     // millisecond precision keeps the metric line well inside the
     // 2000-char stdout tail the driver archives; full ns precision
@@ -287,14 +387,16 @@ object Bench {
           stealPct > StealRetryThreshold ||
           foreignPct > ForeignCpuRetryThreshold ||
           iowaitPct > IowaitRetryThreshold
-      def json: String = {
-        val qJson = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-        s"""{"queries":$qJson,"total":${r3(total)},""" +
-          s""""gauge":{"query":"$gaugeQ","first":${r3(gaugeFirst)},"last":${r3(gaugeLast)},"drift":${r3(drift)}},""" +
-          s""""load_avg":{"start":${r3(loadStart)},"end":${r3(loadEnd)},"max":${r3(loadMax)}},"steal_pct":${r3(stealPct)},""" +
-          s""""foreign_cpu_pct":${r3(foreignPct)},"iowait_pct":${r3(iowaitPct)},""" +
-          s""""spread_max":{"query":"$spreadQuery","ratio":${r3(spreadMax)}}}"""
-      }
+      def queriesJson: String =
+        results.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+      def gaugeJson: String =
+        s"""{"query":"$gaugeQ","first":${r3(gaugeFirst)},"last":${r3(gaugeLast)},"drift":${r3(drift)}}"""
+      def loadJson: String = s"""{"start":${r3(loadStart)},"end":${r3(loadEnd)},"max":${r3(loadMax)}}"""
+      def spreadJson: String = s"""{"query":"$spreadQuery","ratio":${r3(spreadMax)}}"""
+      def json: String =
+        s"""{"queries":$queriesJson,"total":${r3(total)},"gauge":$gaugeJson,"load_avg":$loadJson,""" +
+          s""""steal_pct":${r3(stealPct)},"foreign_cpu_pct":${r3(foreignPct)},"iowait_pct":${r3(iowaitPct)},""" +
+          s""""spread_max":$spreadJson}"""
     }
     def runAttempt(tag: String): Attempt = {
       spreadQ = ""; spreadRatio = 1.0 // per-attempt worst max/min across a query's 3 runs
@@ -461,11 +563,6 @@ object Bench {
       (off, sus)
     }
 
-    val qJson = official.results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val total = official.results.map(_._2).sum
-    val gaugeJson = s"""{"query":"$gaugeQ","first":${r3(official.gaugeFirst)},"last":${r3(official.gaugeLast)},"drift":${r3(official.drift)}}"""
-    val loadJson = s"""{"start":${r3(official.loadStart)},"end":${r3(official.loadEnd)},"max":${r3(official.loadMax)}}"""
     // Every pass ships for honesty, but on its OWN line: folding the
     // attempts array into the metric line made that line ~4–6 KB, and
     // the driver archives only the last 2000 chars of stdout — the
@@ -478,16 +575,13 @@ object Bench {
       "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     }.mkString("{", ",", "}")
     println(s"""{"attempts":${allAttempts.map(_.json).mkString("[", ",", "]")}}""")
-    val spreadJson =
-      s"""{"query":"${official.spreadQuery}","ratio":${r3(official.spreadMax)}}"""
     // rejection visibility (the r12 verdict's ask): `retried` only says
     // extra attempts ran; `attempts_rejected` says how many attempts the
     // contamination predicate REJECTED — a pass that survived a
     // contaminated sibling now says so even when it finished within the
     // two mandatory attempts
     val rejected = allAttempts.count(_.contaminated)
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qJson,"sf":"$sfDir","gauge":$gaugeJson,"load_avg":$loadJson,"steal_pct":${r3(official.stealPct)},"foreign_cpu_pct":${r3(official.foreignPct)},"iowait_pct":${r3(official.iowaitPct)},"spread_max":$spreadJson,"retried":${allAttempts.size > minAttempts},"attempts_rejected":$rejected,"suspect":$suspect,"errors":$errJson}""")
-    spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    println(s"""{"metric":"total","value":${r3(official.total)},"unit":"sec","queries":${official.queriesJson},"sf":"$sfDir","gauge":${official.gaugeJson},"load_avg":${official.loadJson},"steal_pct":${r3(official.stealPct)},"foreign_cpu_pct":${r3(official.foreignPct)},"iowait_pct":${r3(official.iowaitPct)},"spread_max":${official.spreadJson},"retried":${allAttempts.size > minAttempts},"attempts_rejected":$rejected,"suspect":$suspect,"errors":$errJson}""")
+    errors.isEmpty
   }
 }

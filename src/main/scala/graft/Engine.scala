@@ -63,8 +63,7 @@ object Engine {
       // the CPU-dense candidate joins an explicit cores×waves
       // repartition when their estimated shuffle exceeds one 64 MB
       // wave, and leaves every smaller plan byte-identical — so neither
-      // this session builder nor ScaleBench overrides the advisory
-      // (SPARK_GRAFT_ADVISORY remains as an A/B lever).
+      // this session builder nor ScaleBench overrides the advisory.
       .config("spark.ui.enabled", "false")
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n))
     val s = b.getOrCreate()

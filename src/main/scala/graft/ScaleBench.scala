@@ -42,19 +42,6 @@ object ScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Engine.session(s"local[$cpus]", "graft-scalebench",
       shufflePartitions = Some(cpus.toInt))
-    // CPU-dense-per-byte shuffles (int8 code screens, band scoring:
-    // tens of candidate dots per shuffled row) want advisory partitions
-    // far below Spark's IO-tuned 64 MB: at 10⁶ vectors the int8 scoring
-    // join coalesced to 34 minute-long tasks on 32 cores (two-wave
-    // tail, 92-180 s swings); at 16 MB the same query runs 49-64 s.
-    // Round-11: the ENGINE now derives that split per job
-    // (Similarity.denseShuffleSides — explicit cores×waves repartition
-    // of the candidate-join sides when the estimated shuffle exceeds
-    // one 64 MB wave), so this bench runs the NORMAL Engine.session
-    // configuration by default and the env override exists only for
-    // A/B experiments against the in-engine sizing.
-    sys.env.get("SPARK_GRAFT_ADVISORY").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
 
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val n = emb.count()
@@ -78,22 +65,13 @@ object ScaleBench {
     // and load averages cannot see it — printing it per rep is what
     // lets a 103→152 s upward rep drift be attributed to the NEIGHBOR
     // instead of silently poisoning a min-of-N or a sweep comparison
-    def cpuStat(): (Long, Long) =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val cols = src.getLines()
-            .find(_.startsWith("cpu ")).get.trim.split("\\s+").drop(1).map(_.toLong)
-          (cols.take(3).sum + cols.drop(5).take(2).sum, if (cols.length > 7) cols(7) else 0L)
-        } finally src.close()
-      } catch { case _: Throwable => (0L, 0L) }
     def timed(name: String)(body: => Long): (Double, Long) = {
       val outcomes = (1 to scaleReps).map { i =>
-        val (b0, s0) = cpuStat()
+        val (b0, s0, _) = Bench.cpuStat()
         val t0 = System.nanoTime()
         val rows = body
         val dt = (System.nanoTime() - t0) / 1e9
-        val (b1, s1) = cpuStat()
+        val (b1, s1, _) = Bench.cpuStat()
         val steal = if (b1 + s1 > b0 + s0)
           100.0 * (s1 - s0) / math.max(1L, (b1 - b0) + (s1 - s0)) else 0.0
         System.err.println(

@@ -1,44 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // big shuffles start wide, AQE coalesces small ones (see Engine)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep typed-Aggregator top-k hash-based (see Engine.session)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // the persisted-tier SQL surface (graft_dedup_bands etc.) — l66
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]", "graft-verify", Some(cpus.toInt))
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=name1,name2 narrows the dump for local iteration
-    // (same contract as Bench); the full oracle_sql.json is always
-    // written, so check_oracle.py still compares every query — filtered
-    // runs rely on the other dumps being current in outDir.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-        SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY narrows the dump for local iteration (same helper
+    // as Bench); the full oracle_sql.json is always written, so
+    // check_oracle.py still compares every query — filtered runs rely on
+    // the other dumps being current in outDir.
+    val qs = SparkEntry.queries
+    Bench.only(qs.keys.toSeq, "SparkEntry.queries").foreach { name =>
+      // drop the previous run's dump first: a query that now throws
+      // before .write must show up as a missing result in the oracle
+      // check, not pass on stale parquet
+      FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        qs(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name%-26s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
       } catch { case e: Throwable =>

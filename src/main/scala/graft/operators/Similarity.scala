@@ -1710,8 +1710,9 @@ object Similarity {
     // projection and the m·ks·dsub table is rebuilt (boxed, allocated)
     // once per OCCURRENCE per CANDIDATE row instead of once per probe
     // row — measured 24 s of a 26 s serve pass at 10⁵ corpus /
-    // 88-query batch, vs 1.6 s for the join itself (PqScratch stage
-    // isolation). Probe rows are |Q|·nprobe·shards ≈ thousands in the
+    // 88-query batch, vs 1.6 s for the join itself (round-10 stage
+    // isolation, BENCH_LOCAL.md: serve 26 s → 2.2 s once the probe is
+    // materialized). Probe rows are |Q|·nprobe·shards ≈ thousands in the
     // serving regime, ~16 KB each — a bounded, rotation-managed
     // checkpoint, same discipline as the banded-guard materialization.
     val qm = graft.Checkpoints.rotate("similarity.pqProbe", q)
@@ -1754,7 +1755,8 @@ object Similarity {
     * score range and the screen degenerates to an exact re-rank of
     * every cell candidate. The smaller scan still wins at scale —
     * ScaleBench 10⁶ serving A/B: pq 8.3 s vs int8 9.0 s warm (at 10⁵
-    * the fixed costs dominate and the two tie, PqScratch) — but the
+    * the fixed costs dominate and the two tie — round-10 stage
+    * isolation, 88-query batch, pq serve 2.2 s) — but the
     * PRUNING claim belongs to clustered real-world embeddings, where
     * residuals shrink with cluster tightness; raising `m` tightens the
     * bound as 256^(-2·m/d) (m = 32 → ≈ 0.06) at m bytes per posting. */

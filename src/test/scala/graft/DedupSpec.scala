@@ -422,6 +422,11 @@ class DedupSpec extends SparkSpec {
   test("point-probe bkey pushdown: identical results with and without the pushed IN filter") {
     import spark.implicits._
     import graft.operators.DedupIndex
+    // the session's IN threshold must sit above the per-scan key cap
+    // (else Spark degrades a capped IN to one [min,max] range) and below
+    // parquet's ~2000-value or-chain stack limit (see Engine.session)
+    val inThreshold = spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold").toInt
+    assert(inThreshold > DedupIndex.InKeyCap && inThreshold < 2000, s"inFilterThreshold=$inThreshold")
     val docs = Tables(spark, sf, "documents")
     val dir = java.nio.file.Files.createTempDirectory("dix_pp").toString
     DedupIndex.build(docs.filter($"doc_id" % 10 =!= 7), "doc_id", "text", dir)
